@@ -73,7 +73,7 @@ def build():
     argfile = OUT / "sources.txt"
     argfile.write_text("\n".join(str(f) for f in files) + "\n")
     cp = str(spark_jars() / "*")
-    cmd = [java_bin(), "-Xss8m", "-Xmx2g", "-cp", cp, "scala.tools.nsc.Main",
+    cmd = [java_bin(), "-XX:-UsePerfData", "-Xss8m", "-Xmx2g", "-cp", cp, "scala.tools.nsc.Main",
            "-d", str(tmp), "-classpath", cp, *SCALAC_OPTS, "@" + str(argfile)]
     print(f"building {len(files)} Scala sources", file=sys.stderr, flush=True)
     done = subprocess.run(cmd, cwd=ROOT)

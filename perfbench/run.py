@@ -63,7 +63,7 @@ def main():
     (work / "tmp").mkdir(parents=True)
     trace_out = build.OUT / "traces" / f"{args.workload}-seed{args.seed}.json"
     opens = [a for p in ADD_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    cmd = [java, *opens, "-Xms2g", "-Xmx2g", "-XX:+UseParallelGC",
+    cmd = [java, *opens, "-Xms2g", "-Xmx2g", "-XX:+UseParallelGC", "-XX:-UsePerfData",
            f"-Djava.io.tmpdir={work / 'tmp'}",
            f"-Dlog4j2.configurationFile={Path(__file__).resolve().parent / 'log4j2.properties'}",
            "-cp", f"{classes}{os.pathsep}{jars / '*'}", "perfbench.Main",
